@@ -5,21 +5,21 @@ Design for 100 TB:
 
 * **exact**: ``groupBy(md5(text))`` — one hash-agg shuffle, map-side
   combined; keep the min doc_id per group.
-* **MinHash + LSH**: shingle→hash (Catalyst ``xxhash64`` over token slices,
-  zero Python), k permutations as affine transforms ``(a·x + b) mod p``
-  evaluated with ``F.transform``/``F.array_min`` (still zero Python), bands
-  hashed → ``explode(bands)`` → one shuffle groups candidate buckets; exact
-  Jaccard verification only within buckets (the candidate set is tiny
-  relative to n²). Doc-pair space is never materialized globally.
-* **SimHash**: 64-bit signatures in an Arrow pandas UDF (bit-vote kernel),
-  near-dup = signatures matching on any of 4 16-bit bands (Hamming ≤ small).
+* **MinHash + LSH**: shingle→hash (Catalyst ``xxhash64`` over token slices),
+  k permutations as affine transforms ``(a·x + b) mod p`` in one numpy
+  Arrow kernel, bands hashed → ``explode(bands)`` → one shuffle groups
+  candidate buckets; exact Jaccard verification only within buckets (the
+  candidate set is tiny relative to n²). Doc-pair space is never
+  materialized globally.
+* **SimHash**: 64-bit signatures in an Arrow pandas UDF (bit-vote kernel).
+* **components**: duplicate clusters over a pair graph — driver union-find
+  up to ``SMALL_GRAPH_PAIRS`` pairs, min-label propagation (with a
+  large-star/small-star restart for deep chains) above it.
 * **n-gram Jaccard**: exact verified pairwise similarity, only ever applied
   within LSH buckets.
 """
 
 from __future__ import annotations
-
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -31,6 +31,12 @@ from recipeselectors_spark.functions import text as TX
 # 2^31-1: products of two residues stay < 2^62, safe for int64 under the
 # ANSI overflow checks Spark 4 enables by default
 MERSENNE_P = (1 << 31) - 1
+
+# connected_components: up to this many undirected pairs, one driver
+# union-find; above it, distributed min-label propagation, which restarts
+# on large-star/small-star after LABEL_ROUNDS rounds without converging
+SMALL_GRAPH_PAIRS = 1_000_000
+LABEL_ROUNDS = 20
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -73,8 +79,11 @@ def with_minhash(
     document through the HOF interpreter, the measured hot spot of every
     minhash-family query. Values are bit-identical: residues stay below
     2^31, so ``h·a + b < 2^62`` never wraps int64 in either engine, and
-    numpy's ``%`` of a non-negative dividend matches Spark's. Map-only,
-    no shuffle."""
+    numpy's ``%`` of a non-negative dividend matches Spark's. One edge
+    differs: a shingle hash equal to the int64 minimum, where ``np.abs``
+    wraps to a negative value but numpy's floor ``%`` still yields a valid
+    residue in [0, p), whereas the reference's ``F.abs`` throws under
+    ANSI. Map-only, no shuffle."""
     a, b = _perm_params(num_perm, seed)
     a_np, b_np = np.asarray(a, dtype=np.int64), np.asarray(b, dtype=np.int64)
     sh = TX.shingles(text_col, k=k_shingle)
@@ -109,9 +118,9 @@ def _with_minhash_catalyst(
     seed: int = 42,
     out: str = "minhash",
 ) -> DataFrame:
-    """The pre-r6 pure-Catalyst signature path — kept as the independent
-    reference implementation the equivalence test pins :func:`with_minhash`
-    against (and as the fallback if an environment lacks Arrow)."""
+    """The pre-r6 pure-Catalyst signature path — kept only as the
+    independent reference implementation the equivalence test pins
+    :func:`with_minhash` against; no code path dispatches to it."""
     a, b = _perm_params(num_perm, seed)
     sh = TX.shingles(text_col, k=k_shingle)
     df = df.withColumn("__sh__", sh)
@@ -446,12 +455,10 @@ def decontaminate(
     )
 
 
-def _star_components(
-    sym: DataFrame, max_iter: int = 30
-) -> DataFrame:
+def _star_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al. 2014, "Connected
-    Components in MapReduce and Beyond") — the O(log n)-round scale path
-    for HIGH-DIAMETER components where min-label propagation's O(diameter)
+    Components in MapReduce and Beyond") — the O(log n)-round restart for
+    HIGH-DIAMETER components where min-label propagation's O(diameter)
     rounds would not do.
 
     Edges are kept canonical as (u, v) with u > v. Per round:
@@ -468,7 +475,7 @@ def _star_components(
     v = component min.
     """
     edges = (
-        sym.where(F.col("src") != F.col("dst"))
+        pairs.where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
@@ -519,13 +526,13 @@ def _star_components(
 
 
 def _small_graph_components(
-    sym: DataFrame, vertices: DataFrame, id_col: str
+    pairs: DataFrame, vertices: DataFrame, id_col: str
 ) -> DataFrame:
-    """Driver union-find over a BOUNDED edge list (the caller checked the
-    count) — replaces an O(rounds) sequence of join+checkpoint jobs with
-    one bounded collect + one broadcast join. Vertices not on any edge
-    stay their own cluster via the left join. Identical output to the
-    iterative paths: cluster = component-minimum id."""
+    """Driver union-find over a BOUNDED (src, dst) edge list (the caller
+    checked the count) — replaces an O(rounds) sequence of join+checkpoint
+    jobs with one bounded collect + one broadcast join. Vertices not on any
+    edge stay their own cluster via the left join. Identical output to the
+    distributed paths: cluster = component-minimum id."""
     parent: dict = {}
 
     def find(x):
@@ -536,7 +543,7 @@ def _small_graph_components(
             parent[x], x = r, parent[x]
         return r
 
-    for row in sym.collect():
+    for row in pairs.collect():
         a, b = row["src"], row["dst"]
         if a not in parent:
             parent[a] = a
@@ -560,75 +567,44 @@ def _small_graph_components(
 
 
 def connected_components(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 20,
-    strategy: str = "auto",  # auto | label | star
-    small_graph_edges: int = 2_000_000,
+    pairs: DataFrame, vertices: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Connected components over near-dup pairs.
 
     ``pairs`` is an (id_a, id_b) edge list, ``vertices`` the universe (ids
-    not in any pair become singleton components).
+    not in any pair become singleton components). Returns (id_col, cluster)
+    with cluster = min id of the component.
 
-    ``strategy='label'``: min-label propagation — each round joins the
+    Two paths, chosen by a bounded count on ONE localCheckpointed
+    (src, dst) frame of the pairs. Near-dup pair graphs are usually TINY
+    relative to the corpus (dedup ran exact-first and capped buckets), so
+    up to ``SMALL_GRAPH_PAIRS`` a one-collect driver union-find answers.
+    Above it, min-label propagation runs distributed: each round joins the
     current labels across the symmetrized edges and keeps the per-vertex
-    minimum; converges to the component-minimum id in O(diameter) rounds.
-    Near-dup components are shallow (duplicate clusters are near-cliques
-    from the LSH bucket join, 2-4 rounds in practice), so this is the
-    cheap default path. ``strategy='star'``: large-star/small-star
-    (_star_components) — O(log n) rounds, the scale path for deep chain
-    components. ``strategy='auto'`` (default): label propagation, falling
-    back to star ONLY if it fails to converge in ``max_iter`` rounds —
-    instead of round 3's silent-split warning, the answer is now always
-    correct.
+    minimum, converging to the component-minimum id in O(diameter) rounds.
+    Near-dup components are shallow (the LSH bucket join makes
+    near-cliques, 2-4 rounds in practice); a component deeper than
+    ``LABEL_ROUNDS`` restarts on large-star/small-star
+    (:func:`_star_components`, O(log n) rounds), so the answer is always
+    exact.
 
-    The driver loop runs one bounded action per round (the change count)
-    and localCheckpoints every round to keep the plan from growing with
-    the iteration count — lineage length, not data size, is the scale risk
-    in iterative Spark jobs.
-
-    Returns (id_col, cluster) with cluster = min id of the component.
+    Every round runs one bounded action (the change count) and
+    localCheckpoints its labels to keep the plan from growing with the
+    iteration count — lineage length, not data size, is the scale risk in
+    iterative Spark jobs.
     """
-    def _stars_to_clusters(stars: DataFrame) -> DataFrame:
-        # star edges (u, v=component min); vertices with no edge (incl. the
-        # minima themselves) are their own cluster
-        return (
-            vertices.select(F.col(id_col))
-            .join(stars, vertices[id_col] == stars.u, "left")
-            .select(
-                F.col(id_col),
-                F.coalesce("v", F.col(id_col)).alias("cluster"),
-            )
-        )
-
-    if strategy == "star":
-        sym0 = pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        return _stars_to_clusters(_star_components(sym0))
-    sym = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .localCheckpoint()
+    edges = pairs.select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    ).localCheckpoint()
+    if edges.count() <= SMALL_GRAPH_PAIRS:
+        return _small_graph_components(edges, vertices, id_col)
+    sym = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if strategy == "auto" and small_graph_edges is not None:
-        # scale-adaptive dispatch: near-dup pair graphs are usually TINY
-        # relative to the corpus (dedup ran exact-first and capped
-        # buckets), and the iterative loop pays 2-3 jobs per round no
-        # matter how small the data. A bounded count on the checkpointed
-        # edges picks a one-collect driver union-find under the cap; the
-        # distributed O(rounds)/O(log n) paths remain the scale route.
-        if sym.count() <= small_graph_edges:
-            return _small_graph_components(sym, vertices, id_col)
     lab = vertices.select(
         F.col(id_col).alias("v"), F.col(id_col).alias("label")
     ).localCheckpoint()
-    changed = 0
-    for _ in range(max_iter):
+    for _ in range(LABEL_ROUNDS):
         prop = (
             sym.join(lab, sym.src == lab.v)
             .groupBy("dst")
@@ -649,21 +625,17 @@ def connected_components(
         changed = new_lab.where(F.col("__chg__")).limit(1).count()
         lab = new_lab.drop("__chg__")
         if changed == 0:
-            break
-    if changed != 0:
-        if strategy == "auto":
-            # a deeper-than-max_iter component: restart on the log-round
-            # algorithm so the answer is correct instead of silently split
-            return _stars_to_clusters(_star_components(sym))
-        # strategy='label' pinned explicitly: surface the split (ADVICE r3)
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "labels may still split one true component. Raise max_iter or "
-            "use strategy='star'/'auto' for deep chain components.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return lab.select(F.col("v").alias(id_col), F.col("label").alias("cluster"))
+            return lab.select(
+                F.col("v").alias(id_col), F.col("label").alias("cluster")
+            )
+    stars = _star_components(edges)
+    # star edges (u, v=component min); vertices with no edge (incl. the
+    # minima themselves) are their own cluster
+    return (
+        vertices.select(F.col(id_col))
+        .join(stars, vertices[id_col] == stars.u, "left")
+        .select(F.col(id_col), F.coalesce("v", F.col(id_col)).alias("cluster"))
+    )
 
 
 def dedup_corpus_clusters(
@@ -737,47 +709,6 @@ def with_simhash(
         return pd.Series(sigs.astype(np.int64))
 
     return df.withColumn(out, simhash_udf(F.col(text_col)))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Near-dup candidates: equal 16-bit band of the 64-bit SimHash (any of
-    4 bands) — standard Hamming-LSH banding, one explode + shuffle.
-    ``max_bucket`` bounds the per-bucket join fan-out (see cap_buckets)."""
-    sig = with_simhash(df.select(id_col, text_col), text_col)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("bucket"),
-            )
-            for i in range(4)
-        ]
-    )
-    # barrier before the self-join: the signature is a pandas-UDF column —
-    # without it the UDF runs once per join branch (2x Arrow round trips)
-    exploded = cap_buckets(
-        sig.select(id_col, "simhash", F.explode(bands).alias("bb")).select(
-            id_col, "simhash", "bb.band", "bb.bucket"
-        ),
-        max_bucket,
-    ).localCheckpoint()
-    return (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
 
 
 def repeated_span_pairs(
@@ -859,7 +790,6 @@ def semantic_dedup(
     bands: int = 4,
     seed: int = 42,
     max_bucket: int | None = 10_000,
-    cc_strategy: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): documents
     whose EMBEDDINGS are near-identical (cosine >= threshold) collapse to
@@ -869,15 +799,12 @@ def semantic_dedup(
     Composition of existing scale-safe parts: hyperplane-LSH candidate
     pairs with exact cosine verification (:func:`embedding_near_dup_pairs`
     — never the n² pair space), connected components over the pair graph
-    (:func:`connected_components`, 'auto' = label propagation with the
-    large-star/small-star fallback), keep the min id per cluster. Returns
+    (:func:`connected_components`), keep the min id per cluster. Returns
     the deduplicated frame (original columns)."""
     pairs = embedding_near_dup_pairs(
         df, id_col=id_col, vec_col=vec_col, threshold=threshold,
         n_planes=n_planes, bands=bands, seed=seed, max_bucket=max_bucket,
     )
-    comp = connected_components(
-        pairs, df.select(id_col), id_col=id_col, strategy=cc_strategy
-    )
+    comp = connected_components(pairs, df.select(id_col), id_col=id_col)
     keep = comp.where(F.col(id_col) == F.col("cluster")).select(id_col)
     return df.join(keep, id_col, "left_semi")

@@ -103,11 +103,6 @@ def _moment_stats(
     return cov / np.outer(d, d), means, var_pop, n
 
 
-def correlation_matrix(df: DataFrame, cols: list[str]) -> np.ndarray:
-    """Pearson correlation of ``cols`` via one sufficient-stats pass."""
-    return _moment_stats(df, cols)[0]
-
-
 def _pair_w2_matrix(
     df: DataFrame,
     cols: list[str],

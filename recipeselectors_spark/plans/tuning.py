@@ -98,7 +98,3 @@ def expand_candidates(spec: dict[str, Any], n: int = 5) -> list[float]:
         xs = sorted({int(round(x)) for x in xs})
     return xs
 
-
-def finalize_top_p_range(n_predictors: int) -> tuple[int, int]:
-    """parameters.R:19-28 — default [1,4], finalized by data dimensionality."""
-    return (1, max(1, min(4, n_predictors) if n_predictors < 4 else n_predictors))

@@ -139,49 +139,6 @@ def test_cogroup_sample_frac_drops_nothing(spark, frames):
     _check(got, want)
 
 
-def test_salted_equi_join(spark, frames):
-    spine, features = frames
-    s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    dim = spark.createDataFrame(
-        pd.DataFrame({"conv_id": spine["conv_id"].unique(), "grp": 1})
-    )
-    got = asof.salted_equi_join(f, dim, salt=4).count()
-    assert got == len(features)
-
-
-def test_salted_equi_join_deterministic(spark, frames):
-    """The salt is a pure function of row content: re-evaluations and
-    different physical layouts of the same data give the same rows AND
-    spread a hot key across salts (the content hash varies within a key)."""
-    from pyspark.sql import functions as F
-
-    spine, features = frames
-    f = spark.createDataFrame(features)
-    dim = spark.createDataFrame(
-        pd.DataFrame({"conv_id": spine["conv_id"].unique(), "grp": 1})
-    )
-    a = asof.salted_equi_join(f, dim, salt=4).toPandas()
-    b = asof.salted_equi_join(f.repartition(13), dim, salt=4).toPandas()
-    key = sorted(a.columns)
-    pd.testing.assert_frame_equal(
-        a[key].sort_values(key).reset_index(drop=True),
-        b[key].sort_values(key).reset_index(drop=True),
-    )
-    # hot-key spread: the busiest conv_id's rows land on >1 salt value
-    hot = features["conv_id"].value_counts().idxmax()
-    salts = (
-        f.where(F.col("conv_id") == hot)
-        .select(
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in f.columns]), F.lit(4)
-            ).alias("s")
-        )
-        .distinct()
-        .count()
-    )
-    assert salts > 1
-
-
 def test_asof_empty_features(spark, frames):
     """No feature rows at all: every spine row survives with NULL values."""
     spine, features = frames
@@ -311,27 +268,40 @@ def test_oversized_conversation_warns(spark):
     assert not any("max_conv_rows" in str(r.message) for r in rec2)
 
 
-@pytest.mark.parametrize("slice_s", [600, 1800, 7200])
-def test_sliced_cogroup_matches_unsliced(spark, frames, slice_s):
+def _sliced(s, f, **kw):
+    """The sliced path, reached through the public join: a max_conv_rows
+    budget below the largest conversation (its size warning is expected).
+    Returns (rows, executed plan)."""
+    import warnings as W
+
+    with W.catch_warnings():
+        W.simplefilter("ignore", RuntimeWarning)
+        out = asof.asof_join_cogroup(s, f, num_shards=4, **kw)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert asof.SLICE in plan
+    return out.toPandas(), plan
+
+
+@pytest.mark.parametrize("tolerance", [600, 1800, 7200])
+def test_sliced_cogroup_matches_unsliced(spark, frames, tolerance):
     """The spine-side time-slice decomposition (the oversized-conversation
-    mitigation implemented): identical output to the plain cogroup
-    backward+tolerance join for any slice width >= tolerance."""
+    mitigation): identical output to the plain cogroup backward+tolerance
+    join at several slice widths (the width is the tolerance)."""
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
     want = asof.asof_join_cogroup(
-        s, f, ["v1", "v2"], tolerance_s=600, num_shards=4
+        s, f, ["v1", "v2"], tolerance_s=tolerance, num_shards=4
     ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=600, slice_s=slice_s, num_shards=4
-    ).toPandas()
+    got, _ = _sliced(
+        s, f, value_cols=["v1", "v2"], tolerance_s=tolerance, max_conv_rows=1
+    )
     _check(got, want)
 
 
 def test_sliced_cogroup_splits_giant_conversation(spark):
     """A single 5000-row conversation spanning many slices: the sliced join
-    stays correct AND no Arrow group ever holds the whole conversation
-    (pinned by counting per-(shard,slice) group sizes)."""
-    import pandas as pd
+    stays correct AND the spine splits into groups of one slice width,
+    never the whole conversation."""
     from pyspark.sql import functions as F
 
     n = 5000
@@ -350,58 +320,62 @@ def test_sliced_cogroup_splits_giant_conversation(spark):
     want = asof.asof_join_cogroup(
         s, f, ["v1", "v2"], tolerance_s=120, num_shards=4
     ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=120, slice_s=300, num_shards=4
-    ).toPandas()
+    got, _ = _sliced(
+        s, f, value_cols=["v1", "v2"], tolerance_s=120, max_conv_rows=1000
+    )
     _check(got, want)
-    # group-size bound: the spine splits into ceil(50000s / 300s) slices;
-    # the biggest (shard, slice) spine group is ~30 rows, never 5000
+    # group-size bound: the slice width is the 120 s tolerance, so the
+    # biggest (shard, slice) spine group is 12 rows, never 5000
     from recipeselectors_spark.operators.windows import epoch_s
 
     sizes = (
-        s.withColumn("sl", F.floor(epoch_s(F.col("ts")) / F.lit(300)))
+        s.withColumn("sl", F.floor(epoch_s(F.col("ts")) / F.lit(120)))
         .groupBy("sl").count().agg(F.max("count")).collect()[0][0]
     )
-    assert sizes <= 30
+    assert sizes <= 12
 
 
 def test_sliced_cogroup_guards(spark, frames):
+    """Above the budget, joins that cannot be time-sliced raise instead of
+    building one oversized Arrow group."""
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    with pytest.raises(ValueError, match="tolerance_s"):
-        asof.asof_join_cogroup_sliced(s, f, ["v1"], tolerance_s=None)
-    with pytest.raises(ValueError, match="span more than two slices"):
-        asof.asof_join_cogroup_sliced(
-            s, f, ["v1"], tolerance_s=600, slice_s=300
-        )
-    with pytest.raises(ValueError, match="nearest"):
-        asof.asof_join_cogroup_sliced(
-            s, f, ["v1"], tolerance_s=600, direction="nearest"
-        )
+    with pytest.warns(RuntimeWarning, match="max_conv_rows"):
+        with pytest.raises(RuntimeError, match="tolerance_s=None"):
+            asof.asof_join_cogroup(
+                s, f, ["v1"], num_shards=4, max_conv_rows=1
+            )
+    with pytest.warns(RuntimeWarning, match="max_conv_rows"):
+        with pytest.raises(RuntimeError, match="nearest"):
+            asof.asof_join_cogroup(
+                s, f, ["v1"], tolerance_s=600, num_shards=4,
+                direction="nearest", max_conv_rows=1,
+            )
 
 
-@pytest.mark.parametrize("slice_s", [600, 1800])
-def test_sliced_cogroup_forward(spark, frames, slice_s):
+@pytest.mark.parametrize("tolerance", [600, 1800])
+def test_sliced_cogroup_forward(spark, frames, tolerance):
     """direction='forward' slicing (feature replicated to floor((t-tol)/W)
     instead of floor((t+tol)/W)): identical to the unsliced forward join
     at multiple widths."""
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
     want = asof.asof_join_cogroup(
-        s, f, ["v1", "v2"], tolerance_s=600, num_shards=4,
+        s, f, ["v1", "v2"], tolerance_s=tolerance, num_shards=4,
         direction="forward",
     ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=600, slice_s=slice_s, num_shards=4,
-        direction="forward",
-    ).toPandas()
+    got, _ = _sliced(
+        s, f, value_cols=["v1", "v2"], tolerance_s=tolerance,
+        direction="forward", max_conv_rows=1,
+    )
     _check(got, want)
 
 
-def test_cogroup_auto_slices_pathological_conversation(spark, monkeypatch):
-    """A conversation above max_conv_rows routes asof_join_cogroup to the
-    sliced implementation UNPROMPTED (VERDICT r4 #6) — same rows out — and
-    raises a clear error when no finite tolerance makes slicing possible."""
+def test_cogroup_auto_slices_pathological_conversation(spark):
+    """A conversation above max_conv_rows makes asof_join_cogroup slice
+    UNPROMPTED (VERDICT r4 #6) — same rows out — and raise a clear error
+    when no finite tolerance makes slicing possible; max_conv_rows=None
+    opts out into the single-group plan."""
     import warnings as W
 
     n = 400
@@ -416,62 +390,57 @@ def test_cogroup_auto_slices_pathological_conversation(spark, monkeypatch):
     })
     s, f = spark.createDataFrame(spine), spark.createDataFrame(feats)
 
-    calls = []
-    real_sliced = asof.asof_join_cogroup_sliced
-
-    def spy(*a, **kw):
-        calls.append(kw.get("direction", "backward"))
-        return real_sliced(*a, **kw)
-
-    monkeypatch.setattr(asof, "asof_join_cogroup_sliced", spy)
+    got, _ = _sliced(s, f, value_cols=["v"], tolerance_s=10, max_conv_rows=100)
+    assert len(got) == n + 1
     with W.catch_warnings():
         W.simplefilter("ignore", RuntimeWarning)  # the size warning — expected
-        out = asof.asof_join_cogroup(
-            s, f, ["v"], tolerance_s=10, num_shards=4, max_conv_rows=100
-        )
-        assert calls == ["backward"]          # took the sliced path unprompted
-        assert out.count() == n + 1
         # no finite tolerance -> slicing impossible -> loud error, not an OOM
         with pytest.raises(RuntimeError, match="max_conv_rows"):
             asof.asof_join_cogroup(
                 s, f, ["v"], num_shards=4, max_conv_rows=100
             )
-        # explicit opt-out keeps the old single-group behavior
-        assert (
-            asof.asof_join_cogroup(
-                s, f, ["v"], num_shards=4, max_conv_rows=100, auto_slice=False
-            ).count()
-            == n + 1
-        )
-        assert calls == ["backward"]          # opt-out never sliced
+    # explicit opt-out keeps the single-group plan
+    out = asof.asof_join_cogroup(s, f, ["v"], num_shards=4, max_conv_rows=None)
+    assert asof.SLICE not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.count() == n + 1
 
 
 def test_sliced_cogroup_zero_tolerance(spark, frames):
-    """tolerance_s=0 (exact-timestamp matches only) is legal: slice width
-    defaults to 1s and the result equals the unsliced join."""
+    """tolerance_s=0 (exact-timestamp matches only) is legal: the slice
+    width is 1s and the result equals the unsliced join."""
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
     want = asof.asof_join_cogroup(
         s, f, ["v1", "v2"], tolerance_s=0, num_shards=4
     ).toPandas()
-    got = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=0, num_shards=4
-    ).toPandas()
+    got, _ = _sliced(
+        s, f, value_cols=["v1", "v2"], tolerance_s=0, max_conv_rows=1
+    )
     _check(got, want)
 
 
 def test_sliced_cogroup_plan_shape(spark, frames):
-    """Physical-plan pin for the sliced join: exactly one exchange per
-    side (hash on (shard, slice)), no SinglePartition stage, no extra
-    shuffle introduced by the slice replication (it is a map-side
-    explode)."""
+    """Physical-plan pin: exactly one exchange per side, no SinglePartition
+    stage, no extra shuffle from the slice replication (a map-side
+    explode). (shard, __slice__) keys the cogroup only when sliced; the
+    unsliced plan carries no slice column at all."""
+    import re
+
     spine, features = frames
     s, f = spark.createDataFrame(spine), spark.createDataFrame(features)
-    out = asof.asof_join_cogroup_sliced(
-        s, f, ["v1", "v2"], tolerance_s=600, slice_s=600, num_shards=4
+    _, sliced = _sliced(
+        s, f, value_cols=["v1", "v2"], tolerance_s=600, max_conv_rows=1
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 2, f"expected 2 exchanges (one per side): {n_exchanges}"
-    assert "FlatMapCoGroupsInPandas" in plan or "CoGroup" in plan
+    plain = asof.asof_join_cogroup(
+        s, f, ["v1", "v2"], tolerance_s=600, num_shards=4
+    )
+    unsliced = plain._jdf.queryExecution().executedPlan().toString()
+    assert asof.SLICE not in plain._jdf.queryExecution().toString()
+    for plan, keys in (
+        (sliced, r"shard#\d+, __slice__#\d+L, 4\)"),
+        (unsliced, r"shard#\d+, 4\)"),
+    ):
+        assert "SinglePartition" not in plan
+        assert plan.count("Exchange hashpartitioning") == 2, plan
+        assert len(re.findall(r"Exchange hashpartitioning\(" + keys, plan)) == 2, plan
+        assert "FlatMapCoGroupsInPandas" in plan or "CoGroup" in plan

@@ -63,15 +63,6 @@ def test_ngram_jaccard_verification(docs):
     assert (near["jaccard"] < 1.0).all() and (near["jaccard"] > 0.8).all()
 
 
-def test_simhash_near_dup(docs):
-    pairs = dedup.simhash_near_dup_pairs(docs).toPandas()
-    found = set(zip(pairs["id_a"], pairs["id_b"]))
-    # the 3 exact duplicate pairs (base -> base+100000) must all surface;
-    # extra candidates (e.g. exact-dup <-> near-dup) are fine — SimHash
-    # banding is a candidate generator, not a verifier
-    assert all((a, a + 100000) in found for a in range(3))
-
-
 def test_simhash_deterministic(docs):
     a = dedup.with_simhash(docs.limit(5)).select("simhash").toPandas()
     b = dedup.with_simhash(docs.limit(5)).select("simhash").toPandas()
@@ -535,18 +526,24 @@ def test_xxh64_sql_unicode(spark):
         assert got[r["s"]] == r["h"], f"{r['s']!r} ({n_bytes} bytes)"
 
 
-def test_connected_components_semantics(spark):
+def _clusters(pairs, verts):
+    return {
+        r["doc_id"]: r["cluster"]
+        for r in dedup.connected_components(pairs, verts).collect()
+    }
+
+
+def test_connected_components_semantics(spark, monkeypatch):
     """Chains collapse to the component minimum; untouched vertices stay
-    singletons; convergence stops early."""
+    singletons — under the small-graph cap and above it."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9)], "id_a long, id_b long"
     )
     verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 7, 9)], "doc_id long")
-    got = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(pairs, verts).collect()
-    )
-    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 9: 7}
+    want = {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 9: 7}
+    assert _clusters(pairs, verts) == want
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_PAIRS", 0)
+    assert _clusters(pairs, verts) == want
 
 
 def test_dedup_clusters_transitive_chain(spark):
@@ -702,9 +699,10 @@ def test_decontaminate_auto_fallback_routes(spark):
     assert (a["contaminated"] == b["contaminated"]).all()
 
 
-def test_star_components_match_label_on_shallow_graph(spark):
+def test_star_components_match_label_on_shallow_graph(spark, monkeypatch):
     """large-star/small-star gives the identical clustering as label
-    propagation on the usual shallow near-dup graphs."""
+    propagation on the usual shallow near-dup graphs (both forced above
+    the small-graph cap; LABEL_ROUNDS=0 sends the call straight to star)."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -720,24 +718,15 @@ def test_star_components_match_label_on_shallow_graph(spark):
         edges.append((members[0], members[-1]))  # keep it connected
     verts = spark.createDataFrame([(i,) for i in range(vid + 3)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    lab = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="label"
-        ).collect()
-    )
-    star = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="star"
-        ).collect()
-    )
-    assert lab == star
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_PAIRS", 0)
+    lab = _clusters(pairs, verts)
+    monkeypatch.setattr(dedup, "LABEL_ROUNDS", 0)
+    assert _clusters(pairs, verts) == lab
 
 
-def test_auto_components_survive_deep_chain(spark):
-    """A 64-hop duplicate chain (diameter >> the label-prop round budget):
-    strategy='label' warns and may split; the default 'auto' falls back to
+def test_auto_components_survive_deep_chain(spark, monkeypatch):
+    """A 64-hop duplicate chain (diameter >> LABEL_ROUNDS) above the
+    small-graph cap: label propagation runs out of rounds, restarts on
     large-star/small-star and returns ONE component, no warning."""
     import warnings as W
 
@@ -746,25 +735,11 @@ def test_auto_components_survive_deep_chain(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_PAIRS", 0)
     with W.catch_warnings():
-        W.simplefilter("error")  # any RuntimeWarning -> failure
-        got = dict(
-            (r["doc_id"], r["cluster"])
-            for r in dedup.connected_components(
-                pairs, verts, max_iter=5, strategy="auto"
-            ).collect()
-        )
+        W.simplefilter("error", RuntimeWarning)  # any RuntimeWarning -> failure
+        got = _clusters(pairs, verts)
     assert got == {i: 0 for i in range(n)}
-
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        lab = dict(
-            (r["doc_id"], r["cluster"])
-            for r in dedup.connected_components(
-                pairs, verts, max_iter=5, strategy="label"
-            ).collect()
-        )
-    assert set(lab.values()) != {0}  # the split the warning is about
 
 
 def test_quality_filter_rules_and_reasons(spark):
@@ -1165,11 +1140,11 @@ def test_full_corpus_pipeline_end_to_end(spark, tmp_path):
     )
 
 
-def test_small_graph_fast_path_agrees_with_distributed(spark):
-    """r6: strategy='auto' under the edge cap routes to the one-collect
-    driver union-find; its labels must equal both distributed paths, and
-    auto with the cap disabled (small_graph_edges=0) must still run the
-    distributed loop (the deep-chain star fallback stays reachable)."""
+def test_small_graph_fast_path_agrees_with_distributed(spark, monkeypatch):
+    """Under SMALL_GRAPH_PAIRS the one-collect driver union-find answers;
+    its labels must equal both distributed paths on a random graph
+    (SMALL_GRAPH_PAIRS=0 forces label propagation, LABEL_ROUNDS=0 its
+    large-star/small-star restart)."""
     rng = __import__("random").Random(7)
     edges = [(i, i + 1) for i in range(0, 40, 2)]
     edges += [(rng.randrange(50), rng.randrange(50)) for _ in range(30)]
@@ -1177,29 +1152,12 @@ def test_small_graph_fast_path_agrees_with_distributed(spark):
     verts = spark.createDataFrame([(i,) for i in range(55)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
 
-    fast = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(pairs, verts).collect()
-    )
-    lab = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="label"
-        ).collect()
-    )
-    star = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, strategy="star"
-        ).collect()
-    )
-    no_cap = dict(
-        (r["doc_id"], r["cluster"])
-        for r in dedup.connected_components(
-            pairs, verts, small_graph_edges=0
-        ).collect()
-    )
-    assert fast == lab == star == no_cap
+    fast = _clusters(pairs, verts)
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_PAIRS", 0)
+    lab = _clusters(pairs, verts)
+    monkeypatch.setattr(dedup, "LABEL_ROUNDS", 0)
+    star = _clusters(pairs, verts)
+    assert fast == lab == star
 
 
 def test_minhash_kernel_matches_catalyst_reference(spark):
